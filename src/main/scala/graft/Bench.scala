@@ -36,9 +36,12 @@ import org.apache.spark.sql.SparkSession
   * lexicographic order after q149 — which sorts before q35 — silently
   * absorbed the shingle build and drifted 0.95x -> 1.49x against an
   * envelope that attributed that cost to q35. Per-query numbers are
-  * therefore suite-relative, not standalone; the emitted JSON carries
-  * the shared groups under "shared_cache_groups" and the actual payer
-  * under "cache_build_paid_by" so a BENCH_ONLY subset is read correctly.
+  * therefore suite-relative, not standalone. Payers and families are
+  * declared once, in [[queries.Kernels]]; which queries built or hit
+  * each family is RECORDED per query during the timed reps, and the
+  * emitted JSON carries those members under "shared_cache_groups" and
+  * the first builder under "cache_build_paid_by", so a BENCH_ONLY
+  * subset is read correctly and no member list can drift.
   *
   * A query that throws is reported as null in `queries` and listed in
   * `errors` instead of contributing a near-zero time to the total.
@@ -52,74 +55,6 @@ import org.apache.spark.sql.SparkSession
   * q63/q74/q83 transient-spike class undiagnosable).
   */
 object Bench {
-
-  /** Within-rep shared session caches as (group, canonical payer,
-    * members): the canonical payer runs FIRST (see run-order note in
-    * main) and pays the build cost; later members time a cache hit.
-    * Members are every catalog entry that reads the group's persisted
-    * kernel, headline or not, so BENCH_ALL runs attribute correctly.
-    */
-  private[graft] val sharedGroups: Seq[(String, String, Seq[String])] = Seq(
-    ("verified_pairs", "q35_ngram_jaccard_neardup",
-      Seq("q35_ngram_jaccard_neardup", "q50_corpus_curation",
-        "q62_dedup_components", "q130_canonical_selection",
-        "q135_dedup_yield",
-        // round-11 membership completion (full consumer audit of
-        // ngramNearDupPairs): every truth-kernel reader, headline or not
-        "q139_leakage_free_split", "q234_dedup_token_ledger",
-        "q296_blocking_quality", "q305_fellegi_sunter",
-        "q307_sorted_neighborhood")),
-    ("lsh_candidates", "q40_embedding_lsh_ann",
-      Seq("q40_embedding_lsh_ann", "q57_embedding_neardup_ann")),
-    // the adaptive multi-probe LSH bucket/candidate kernel
-    // (annBucketCache/annCandCache) — q165 sorts first among consumers,
-    // so it is the payer in any BENCH_ALL run
-    ("ann_buckets", "q165_semantic_decontamination",
-      Seq("q165_semantic_decontamination", "q204_mutual_knn",
-        "q238_matryoshka_audit",
-        // round 12: caught by BenchGroupsSpec's derived-membership
-        // audit on its first run — q240 composes the LSH cut and reads
-        // this family's caches (ScaleSweep knew; this list didn't)
-        "q240_contamination_report")),
-    ("shingle_rows", "q35_ngram_jaccard_neardup",
-      Seq("q35_ngram_jaccard_neardup", "q36_minhash_lsh_neardup",
-        "q50_corpus_curation", "q62_dedup_components",
-        "q65_incremental_dedup", "q67_decontamination",
-        "q86_bloom_decontamination", "q112_containment_neardup",
-        "q130_canonical_selection", "q132_ingest_merge",
-        "q135_dedup_yield",
-        // round-10 additions: the minhash/prefix AUDIT entries read the
-        // same shingle/signature kernels (q149's round-9 drift was this
-        // membership gap — it sorted before q35 and silently paid the
-        // build the envelope attributed to q35)
-        "q149_minhash_estimate_audit", "q296_blocking_quality",
-        "q297_bbit_minwise",
-        // round-11 membership completion (full consumer audit of
-        // shingleRows/shingleTids/shingleSizes/minhashSigs/simhashPerDoc/
-        // prefixRows/verifyJaccard — all read the persisted shingle rows)
-        "q37_simhash", "q38_simhash_pairs", "q45_fingerprint",
-        "q60_ngram_novelty", "q139_leakage_free_split",
-        "q140_source_overlap", "q172_source_minhash_overlap",
-        "q231_accession_novelty", "q234_dedup_token_ledger",
-        "q260_coverage_selection", "q305_fellegi_sunter",
-        "q307_sorted_neighborhood",
-        // round 12: BenchGroupsSpec derived-membership audit — q240's
-        // lexical probe reads the shingle kernel too
-        "q240_contamination_report")),
-    ("co_pairs", "q14_part_pairs",
-      Seq("q14_part_pairs", "q85_pagerank", "q94_triangle_count",
-        "q95_item_similarity", "q111_degree_stats",
-        "q137_association_rules",
-        // round-10: the iterative graph family reads coEdges/coPairCounts
-        "q290_greedy_matching", "q291_butterfly_census",
-        "q294_katz_centrality", "q300_two_sweep_diameter",
-        // round-11 membership completion (full consumer audit of
-        // coPairCounts/coEdges)
-        "q127_kcore_decomposition", "q164_label_propagation",
-        "q222_bfs_distances", "q243_clustering_buckets",
-        "q251_sssp_weighted", "q252_modularity",
-        "q258_link_prediction", "q313_louvain_move",
-        "q314_wl_refinement", "q317_anf")))
 
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
@@ -196,7 +131,7 @@ object Bench {
     // Payer-first ordering pins the build cost on the designated
     // payer every run, so per-query numbers stay comparable across
     // rounds as members are added.
-    val payersFirst = sharedGroups.map(_._2).distinct.filter(names.map(_._1).toSet)
+    val payersFirst = queries.Kernels.payers.filter(names.map(_._1).toSet)
     val runOrder = names.filter(n => payersFirst.contains(n._1))
       .sortBy(n => payersFirst.indexOf(n._1)) ++
       names.filterNot(n => payersFirst.contains(n._1))
@@ -206,6 +141,9 @@ object Bench {
     val swDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
     val spDeltas = scala.collection.mutable.Map.empty[String, Vector[Long]]
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // family -> members in run order, and family -> first query to build it
+    val members = scala.collection.mutable.Map.empty[String, Vector[String]]
+    val paidBy = scala.collection.mutable.Map.empty[String, String]
     val stageMetrics = new StageMetricsListener
     spark.sparkContext.addSparkListener(stageMetrics)
     def drainedShuffleSpill(): (Long, Long) = {
@@ -236,6 +174,11 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         val gcd = gcMillis() - gc0; val cgd = codegenCompiles() - cg0
         val (sw1, sp1) = drainedShuffleSpill()
+        queries.Kernels.drainTouched(spark).foreach { case (fam, built) =>
+          val ms = members.getOrElse(fam, Vector())
+          if (!ms.contains(name)) members(fam) = ms :+ name
+          if (built) paidBy.getOrElseUpdate(fam, name)
+        }
         if (ok) {
           times(name) = times.getOrElse(name, Vector()) :+ dt
           gcDeltas(name) = gcDeltas.getOrElse(name, Vector()) :+ gcd
@@ -279,19 +222,19 @@ object Bench {
     val swJson = perRep(swDeltas, (l: Long) => l.toString)
     val spJson = perRep(spDeltas, (l: Long) => l.toString)
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shared = sharedGroups.map { case (g, _, ms) =>
-      "\"" + g + "\":" + ms.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // self-describing anchors for the payer-bearing kernel families, in
+    // declaration order: the members recorded this run, and WHICH
+    // selected query actually paid the build (the canonical payer when
+    // it is in the suite, since it runs first; else the first builder
+    // in run order). Model memos have no payer: their build is the
+    // owning query's own work, so they are not reported here.
+    val families = queries.Kernels.all.filter(_.payer.nonEmpty).map(_.family)
+      .distinct.filter(members.contains)
+    val shared = families.map { g =>
+      "\"" + g + "\":" + members(g).map("\"" + _ + "\"").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    // self-describing anchors: for each group, WHICH selected query
-    // actually paid the build this run — the canonical payer when it is
-    // in the suite (it runs first by construction), else the earliest
-    // member in run order (BENCH_ONLY subsets without the payer)
-    val inSuite = names.map(_._1).toSet
-    val runIdx = runOrder.map(_._1).zipWithIndex.toMap
-    val attribution = sharedGroups.flatMap { case (g, payer, ms) =>
-      (if (inSuite(payer)) Some(payer)
-       else ms.filter(inSuite).sortBy(runIdx).headOption)
-        .map(p => "\"" + g + "\":\"" + p + "\"")
+    val attribution = families.flatMap { g =>
+      paidBy.get(g).map(p => "\"" + g + "\":\"" + p + "\"")
     }.mkString("{", ",", "}")
     // Two lines, diagnostics FIRST: the driver captures only a ~2000-char
     // tail of the output, so the LAST line must be a compact scalar summary

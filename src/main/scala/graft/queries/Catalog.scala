@@ -289,14 +289,11 @@ object Catalog {
     * count aggregation ran identically inside each of those queries;
     * computing it once per (session, fixture) and persisting removes
     * the suite's largest duplicated stage. Bounded: one row per
-    * observed pair (~85k at sf0.01). Bench declares the sharing under
-    * `shared_cache_groups.co_pairs`; [[clearCaches]] drops it.
+    * observed pair (~85k at sf0.01). Memoized as [[Kernels.coPairs]]
+    * (bench family `co_pairs`); [[clearCaches]] drops it.
     */
-  private val coPairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def coPairCounts(s: SparkSession, dir: String): DataFrame =
-    coPairCache.getOrElseUpdate((s, dir), {
+    Kernels.coPairs(s, dir) {
       // Round 15 (guide §2.4 share one exchange): partition the
       // projection by the JOIN key before the dedup — HashPartitioning
       // on l_orderkey satisfies the distinct's clustering requirement
@@ -315,7 +312,7 @@ object Catalog {
         .groupBy(col("a.l_partkey").as("p1"), col("b.l_partkey").as("p2"))
         .agg(count(lit(1)).as("co"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Size-gated broadcast hint for the vertex-sized tables of the
     * iterative graph kernels (q85 ranks, q290 proposals/gone, q294
@@ -346,10 +343,12 @@ object Catalog {
     * unconditional count costing 0.1-0.26 s on 1.5-3 s queries at
     * sf0.1). An unwalkable path (object store at cluster scale)
     * counts as NOT small, falling through to the precise gate —
-    * never the other way.
+    * never the other way. An EXPLICITLY set SPARK_GRAFT_BCAST_MAX_ROWS
+    * skips the input-bytes tier, so it works as a kill switch at every
+    * scale (0 disables every gated broadcast).
     */
-  private val vertexBcastMaxRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BCAST_MAX_ROWS", "8000000").toLong
+  private val vertexBcastMaxRows: Option[Long] =
+    sys.env.get("SPARK_GRAFT_BCAST_MAX_ROWS").map(_.toLong)
 
   private val vertexBcastInputBytes: Long =
     sys.env.getOrElse("SPARK_GRAFT_BCAST_INPUT_BYTES",
@@ -367,10 +366,22 @@ object Catalog {
       if (root.exists) walk(root) else Long.MaxValue
     })
 
+  /** The [[bcastIfSmall]] decision as a pure function of its inputs:
+    * `maxRows` is the explicitly set row limit, if any; `inputBytes`
+    * and `rows` are by-name so each tier pays for its measurement only
+    * when it is consulted.
+    */
+  private[graft] def vertexBroadcast(maxRows: Option[Long],
+      inputBytes: => Long, inputBytesLimit: Long, rows: => Long): Boolean =
+    maxRows match {
+      case Some(max) => rows <= max
+      case None => inputBytes <= inputBytesLimit || rows <= 8000000L
+    }
+
   private def bcastIfSmall(df: DataFrame, dir: String,
       rows: => Long): DataFrame =
-    if (fixtureBytes(dir) <= vertexBcastInputBytes ||
-      rows <= vertexBcastMaxRows) broadcast(df)
+    if (vertexBroadcast(vertexBcastMaxRows, fixtureBytes(dir),
+      vertexBcastInputBytes, rows)) broadcast(df)
     else df
 
   /** J4 self-join co-occurrence (course pairs, train_module.py:397-405):
@@ -11711,18 +11722,7 @@ object Catalog {
     * would otherwise plan-match across bench reps and skip the read.
     */
   def clearCaches(s: org.apache.spark.sql.SparkSession): Unit = {
-    coPairCache.keys.filter(_._1 eq s).foreach { k =>
-      coPairCache.remove(k).foreach(_.unpersist(blocking = true))
-    }
-    PipelineCatalog.clearCaches(s)
-    graft.ml.MlCatalog.clearCaches(s)
+    Kernels.clear(s)
     s.catalog.clearCache()
   }
-
-  /** Shared-cache-family introspection for BenchGroupsSpec — see
-    * [[PipelineCatalog.cacheFamiliesFor]].
-    */
-  private[graft] def cacheFamiliesFor(s: SparkSession): Set[String] =
-    PipelineCatalog.cacheFamiliesFor(s) ++
-      (if (coPairCache.keys.exists(_._1 eq s)) Set("co_pairs") else Set.empty)
 }

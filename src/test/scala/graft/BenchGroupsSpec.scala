@@ -1,52 +1,56 @@
 package graft
 
-/** Bench's shared-cache attribution is only as good as its
-  * hand-maintained member lists: the round-9 q149 envelope drift
-  * (0.95x → 1.49x) was a query that read the shingle kernel but was
-  * missing from the group, so whenever it sorted before the payer it
-  * silently paid a build the envelope attributed elsewhere. This spec
-  * DERIVES membership instead of trusting it: every catalog entry is
-  * constructed with cleared caches, the cache maps are snapshotted
-  * (kernels register at construction time via getOrElseUpdate — no
-  * execution needed), and the derived consumer set must equal
-  * Bench.sharedGroups exactly, both directions, for every group.
+import graft.queries.{Catalog, Kernels}
+
+/** Bench records shared-cache membership from the kernel registry at
+  * run time, so there is no member list left to drift (the round-9
+  * q149 and round-12 q240 class). What can still go wrong is the
+  * registry's own declarations and its release paths. Every catalog
+  * entry is constructed on cleared caches (kernels fill at
+  * construction time, no execution needed) and the families it built
+  * or hit are read back from the registry's per-session record.
   */
 class BenchGroupsSpec extends SparkSpec {
 
-  test("sharedGroups member lists equal the derived cache consumers") {
-    val derived = scala.collection.mutable.Map.empty[String, Set[String]]
+  test("kernel registry: families used, payers build, clearCaches releases") {
+    val touched = scala.collection.mutable.Map.empty[String, Set[String]]
       .withDefaultValue(Set.empty)
-    queries.Catalog.all.toSeq.sortBy(_._1).foreach { case (name, spec) =>
-      queries.Catalog.clearCaches(spark)
-      // construction alone registers kernel caches; execution not needed.
-      // Construction failures are CatalogSmokeSpec's job.
+    val builders = scala.collection.mutable.Map.empty[String, Set[String]]
+      .withDefaultValue(Set.empty)
+    val everHeld = scala.collection.mutable.Set.empty[Kernels.Kernel[_, _]]
+    Catalog.all.toSeq.sortBy(_._1).foreach { case (name, spec) =>
+      Catalog.clearCaches(spark)
+      // construction failures are CatalogSmokeSpec's job
       scala.util.Try(spec.fn(spark, sf0001))
-      queries.Catalog.cacheFamiliesFor(spark).foreach { fam =>
-        derived(fam) = derived(fam) + name
+      Kernels.drainTouched(spark).foreach { case (fam, built) =>
+        touched(fam) += name
+        if (built) builders(fam) += name
+      }
+      everHeld ++= Kernels.held(spark)
+      Catalog.clearCaches(spark)
+      val left = Kernels.held(spark).map(_.family)
+      assert(left.isEmpty, s"$name: clearCaches left kernels of $left")
+    }
+
+    val families = Kernels.all.map(_.family).distinct
+    val unused = families.filterNot(touched.contains)
+    assert(unused.isEmpty, s"declared families no catalog entry touches: $unused")
+    Kernels.all.foreach { k =>
+      k.payer.foreach { p =>
+        assert(builders(k.family).contains(p),
+          s"family '${k.family}': payer $p does not build it " +
+            s"(builders: ${builders(k.family).toSeq.sorted.mkString(", ")})")
       }
     }
-    queries.Catalog.clearCaches(spark)
+    // every kernel held a value at some point, so the per-entry release
+    // check above exercised all of their release paths
+    val neverHeld = Kernels.all.indices.filterNot(i => everHeld(Kernels.all(i)))
+      .map(i => s"#$i (${Kernels.all(i).family})")
+    assert(neverHeld.isEmpty, s"kernels no entry builds: $neverHeld")
 
-    val declared = Bench.sharedGroups.map { case (g, _, ms) => g -> ms.toSet }
-    // every declared group must exist and match the derivation exactly
-    declared.foreach { case (group, members) =>
-      val got = derived(group)
-      val missing = got -- members   // consumes the kernel, not declared
-      val stale = members -- got     // declared, no longer consumes
-      assert(missing.isEmpty,
-        s"group '$group': consumers missing from Bench.sharedGroups " +
-          s"(the q149 drift class): ${missing.toSeq.sorted.mkString(", ")}")
-      assert(stale.isEmpty,
-        s"group '$group': declared members that no longer read the " +
-          s"kernel: ${stale.toSeq.sorted.mkString(", ")}")
-    }
-    // and no cache family may exist without a declared group
-    val undeclared = derived.keySet -- declared.map(_._1).toSet
-    assert(undeclared.isEmpty,
-      s"cache families with no Bench.sharedGroups entry: $undeclared")
-    // payers must be members of their own group (run-order contract)
-    Bench.sharedGroups.foreach { case (g, payer, ms) =>
-      assert(ms.contains(payer), s"group '$g': payer $payer not a member")
-    }
+    // the touched record is released with the values
+    Catalog.all("q35_ngram_jaccard_neardup").fn(spark, sf0001)
+    Catalog.clearCaches(spark)
+    assert(Kernels.held(spark).isEmpty && Kernels.drainTouched(spark).isEmpty)
   }
 }

@@ -46,6 +46,9 @@ class MlSpec extends SparkSpec {
     assert(math.abs(auc - 0.512286) < 0.05, s"auc $auc drifted from committed 0.512286")
     assert(math.abs(logloss - 0.635068) < 0.05, s"logloss $logloss drifted from 0.635068")
     assert(math.abs(acc - 0.679832) < 0.05, s"accuracy $acc drifted from 0.679832")
+    // an empty scored frame has no defined AUC: NaN, not an exception
+    val empty = MlCatalog.gbtScored(spark, sf0001, categorical = true).limit(0)
+    assert(MlCatalog.exactAuc(empty).isNaN, "empty-frame AUC must be NaN")
   }
 
   test("m13 learning curve: nested budgets, sane AUC band, no leaked caches") {
